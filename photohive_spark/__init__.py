@@ -6,13 +6,15 @@ Modules:
 - config:     hyperparameters (reference defaults) + Spark scale knobs
 - kernels:    pure-numpy DSP feature kernels (Spark-free)
 - tokenize:   deterministic tokenizer (documents -> tokens table)
-- engine:     DataFrame feature-extraction pipeline (mapInPandas)
+- engine:     DataFrame feature-extraction pipeline (one mapInArrow stage,
+              shared by batch and streaming)
 - pit:        point-in-time ops (as-of join, backfill, lag/lead, sessionize)
 - skew:       salting / repartition helpers
 - dedup:      exact + MinHash-LSH + SimHash + n-gram Jaccard dedup
 - similarity: embedding cosine top-k (brute force + LSH-bucketed)
 - text:       language-ID, quality scoring, token counting, fingerprinting
-- multimodal: binary-column decode/feature plumbing (decode stubbed)
+- multimodal: binary-column decode/feature plumbing (real PNG/JPEG/GIF,
+              WAV and MJPEG decode, or a deterministic fake)
 - lineage:    per-partition metrics + checkpoint/resume
 """
 

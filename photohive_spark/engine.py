@@ -1,14 +1,16 @@
 """DataFrame feature-extraction pipeline.
 
 The Spark recast of the reference's entry point ``get_full_report_data``
-(``src/interface.c:20-94``): one Arrow-batched ``mapInPandas`` stage runs the
-full kernel DAG per row (all-numpy, see kernels.py), emitting one feature
-row per (doc_id, event_ts) — the ``Full_Report_Data`` analog
-(``src/utilities.h:30-37``).
+(``src/interface.c:20-94``): one ``mapInArrow`` stage runs the full kernel
+DAG over each Arrow record batch (length-grouped numpy, see
+batch_kernels.py), emitting one feature row per (doc_id, event_ts) — the
+``Full_Report_Data`` analog (``src/utilities.h:30-37``). Batch
+(extract_features_df) and streaming (streaming.stream_features) build the
+same stage.
 
 Scale notes (100 TB / 10^12 rows):
 - the extraction is embarrassingly parallel: NO shuffle is introduced —
-  mapInPandas runs straight over scan partitions, so throughput scales
+  mapInArrow runs straight over scan partitions, so throughput scales
   linearly with executors and the only data movement is the Arrow IPC hop
   JVM -> Python worker (the analog of the reference's ctypes FFI boundary,
   ``lib.py:22-34``);
@@ -22,10 +24,7 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
@@ -94,77 +93,23 @@ def features_row(tokens: np.ndarray, cfg: EngineConfig,
     }
 
 
-def _roi_tuples(cell) -> list[tuple[int, int]] | None:
-    """One row's ROI column value -> [(start, end), ...]. Arrow delivers
-    array<struct> as a sequence of dicts (or Rows); None passes through."""
-    if cell is None:
-        return None
-    out = []
-    for r in cell:
-        if isinstance(r, dict):
-            out.append((int(r["start"]), int(r["end"])))
-        else:  # Row / tuple-like
-            out.append((int(r[0]), int(r[1])))
-    return out
-
-
-def _make_kernel(cfg: EngineConfig, roi_col: str | None = None,
-                 time_acc=None, stage_accs=None):
-    """Build the mapInPandas function. The per-batch loop is Python over
-    rows *within* an Arrow batch, but every kernel call is vectorized numpy
-    over the whole token array — the reference's 'whole-plane vectorized'
-    style (SURVEY §1.2); there is no Spark-level per-row Python.
+def _make_arrow_kernel(cfg: EngineConfig, roi_col: str | None = None,
+                       time_acc=None, stage_accs=None):
+    """Build the mapInArrow function: the kernel DAG runs straight off the
+    record batch's tokens ListArray (flat values + offsets — no per-row
+    ndarray materialization, no pandas on either side), and the outputs
+    are assembled as Arrow arrays from flat numpy buffers
+    (batch_kernels.batch_extract_arrow). Passthrough columns (doc_id,
+    tokens, n_tok, source, event_ts) are reused zero-copy.
 
     ``time_acc`` (optional Spark accumulator) collects TOTAL kernel wall
     seconds across all workers; ``stage_accs`` (optional dict name ->
-    accumulator, keys from batch_kernels._group_features: stats_s, hist_s,
-    autocorr_s, bandpass_s, blur_fft_s, palette_s, peaks_s) splits it per
-    kernel family — the per-stage analog of the reference's timing macros
+    accumulator, keys from KERNEL_STAGES) splits it per kernel family —
+    the per-stage analog of the reference's timing macros
     (``src/utilities.h:10-18``; README.md:63-75 times 11 stages), surfaced
     through lineage manifests. Accumulators updated in transformations are
     at-least-once: task retries / speculative duplicates overcount, so
     treat the timing as an advisory profile, not an exact meter."""
-
-    feature_names = [f.name for f in FEATURE_FIELDS]
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
-        from .batch_kernels import batch_extract_columns
-        for pdf in batches:
-            t0 = _time.perf_counter()
-            rois_list = None
-            if roi_col is not None and roi_col in pdf.columns:
-                rois_list = [_roi_tuples(c) for c in pdf[roi_col]]
-            timings = {} if stage_accs is not None else None
-            cols = batch_extract_columns(list(pdf["tokens"]), cfg, rois_list,
-                                         timings=timings)
-            if stage_accs is not None:
-                for name, secs in timings.items():
-                    if name in stage_accs:
-                        stage_accs[name].add(secs)
-            if time_acc is not None:
-                time_acc.add(_time.perf_counter() - t0)
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "tokens": pdf["tokens"].to_numpy(),
-                "n_tok": pdf["n_tok"].to_numpy(),
-                "source": pdf["source"].to_numpy(),
-                "event_ts": pdf["event_ts"].to_numpy(),
-                **{n: cols[n] for n in feature_names},
-            })
-            yield out
-
-    return extract
-
-
-def _make_arrow_kernel(cfg: EngineConfig, roi_col: str | None = None,
-                       time_acc=None, stage_accs=None):
-    """Build the mapInArrow function (r7): the kernel DAG runs straight
-    off the record batch's tokens ListArray (flat values + offsets — no
-    per-row ndarray materialization, no pandas on either side), and the
-    outputs are assembled as Arrow arrays from flat numpy buffers
-    (batch_kernels.batch_extract_arrow). Passthrough columns (doc_id,
-    tokens, n_tok, source, event_ts) are reused zero-copy."""
     feature_names = [f.name for f in FEATURE_FIELDS]
     pass_cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
 
@@ -200,6 +145,11 @@ def _make_arrow_kernel(cfg: EngineConfig, roi_col: str | None = None,
     return extract
 
 
+# Kernel families timed by batch_kernels.batch_extract_arrow: hist_s and
+# palette_s by its batch-global pass (hist_s also takes each length
+# group's mean_norm_value), the rest by _group_features per length group
+# (stats_s = rms + spectrum + sharpness, blur_fft_s = 2-D framing + polar
+# profile).
 KERNEL_STAGES = ("stats_s", "hist_s", "autocorr_s", "bandpass_s",
                  "blur_fft_s", "palette_s", "peaks_s")
 
@@ -223,11 +173,10 @@ def extract_features_df(tokens_df: DataFrame,
     carries one per-ROI sharpness per entry (cap 10), else it is empty.
 
     Stage shape: Scan -> [optional cost rebalance] -> MapInArrow. No
-    shuffle unless the caller opted into rebalancing. (r7: the Python
-    stage is mapInArrow — tokens flow in as flat Arrow buffers and
-    features flow out as Arrow arrays built from flat numpy, removing
-    the pandas conversion and all per-row list/dict assembly on the
-    boundary; values identical, parity-pinned in tests.)
+    shuffle unless the caller opted into rebalancing. Tokens flow in as
+    flat Arrow buffers and features flow out as Arrow arrays built from
+    flat numpy. streaming.stream_features returns this same stage over a
+    stream.
     """
     cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
     if roi_col is not None:

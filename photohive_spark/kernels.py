@@ -7,9 +7,10 @@ it replicates.  Where the reference has genuine UB or a quirk, the choice
 made here is documented inline and is canonical for our goldens
 (SURVEY.md §7 "Hard parts").
 
-Everything here is vectorized numpy — these run inside Arrow-batched
-``mapInPandas`` workers, one call per document, no per-row Python at the
-Spark level.
+Everything here is vectorized numpy, one call per document. These are the
+per-document semantics: the production stage (batch_kernels, run by
+engine's mapInArrow) vectorizes them across whole Arrow batches and is
+parity-tested against them.
 """
 
 from __future__ import annotations

@@ -3,8 +3,8 @@ windowed aggregates, and stateful gap sessionization.
 
 The reference is strictly batch-one-image (SURVEY §2.7); this module is the
 engine's incremental-ingest path: new token sequences land as files (or a
-Kafka topic in production), features are extracted with the SAME
-Arrow-batched kernels as the batch path (stateless mapInPandas is
+Kafka topic in production), features are extracted by the SAME mapInArrow
+stage as the batch path (engine.extract_features_df — a stateless map is
 streaming-safe), and late data is bounded by event-time watermarks.
 
 Scale notes: the feature stream is stateless => unbounded parallelism, no
@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from .config import DEFAULT_CONFIG, EngineConfig
-from .engine import FEATURE_SCHEMA, _make_kernel
+from .engine import extract_features_df
 
 TOKENS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -46,11 +46,10 @@ def read_tokens_stream(spark: SparkSession, path: str,
 
 def stream_features(tokens_stream: DataFrame,
                     cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Stateless streaming feature extraction — identical kernels/schema to
-    the batch path, so batch and stream outputs are row-for-row equal."""
-    cols = ["doc_id", "tokens", "n_tok", "source", "event_ts"]
-    return tokens_stream.select(*cols).mapInPandas(_make_kernel(cfg),
-                                                   FEATURE_SCHEMA)
+    """Stateless streaming feature extraction — the batch stage itself
+    (extract_features_df), so batch and stream outputs are row-for-row
+    equal."""
+    return extract_features_df(tokens_stream, cfg)
 
 
 def windowed_source_stats(tokens_stream: DataFrame,

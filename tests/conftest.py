@@ -18,3 +18,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _arrow_rows(cols: dict) -> list[dict]:
+    """{column name -> pyarrow array} feature columns (batch_kernels'
+    output) -> one plain dict per row, shaped like engine.features_row."""
+    py = {name: arr.to_pylist() for name, arr in cols.items()}
+    n = len(next(iter(py.values())))
+    return [{name: vals[i] for name, vals in py.items()} for i in range(n)]
+
+
+@pytest.fixture
+def arrow_rows():
+    return _arrow_rows

@@ -23,9 +23,22 @@ def _docs():
     return docs
 
 
-def test_batch_matches_per_doc():
-    docs = _docs()
-    got = batch_extract(docs, CFG)
+# edge batches: the one kernel must also hold on batches that are empty,
+# all-null, or made only of one-token docs
+_BATCHES = {
+    "mixed": _docs,
+    "empty": lambda: [],
+    "all_null": lambda: [None] * 5,
+    "one_token": lambda: [np.array([t], dtype=np.int32)
+                          for t in (0, 1, 777, 25000, 50256)],
+}
+
+
+@pytest.mark.parametrize("batch", list(_BATCHES))
+def test_batch_matches_per_doc(batch, arrow_rows):
+    docs = _BATCHES[batch]()
+    got = arrow_rows(batch_extract(docs, CFG))
+    assert len(got) == len(docs)
     for i, t in enumerate(docs):
         tt = np.array([], dtype=np.int32) if t is None else np.asarray(t, np.int32)
         want = features_row(tt, CFG)
@@ -62,7 +75,7 @@ def test_batch_not_slower():
     assert bt < st * 1.3, (bt, st)
 
 
-def test_nondefault_config_parity():
+def test_nondefault_config_parity(arrow_rows):
     """Non-default hyperparameters flow through both kernel paths (catches
     hardcoded 112-cell / 40-band / 72-angle assumptions)."""
     cfg = EngineConfig(h_parts=10, s_parts=3, v_parts=4, radius_parts=20,
@@ -70,7 +83,7 @@ def test_nondefault_config_parity():
                        frame_width=64, coverage_thresh=0.9)
     rng = np.random.default_rng(31)
     docs = [rng.integers(0, 50257, n, dtype=np.int32) for n in (50, 50, 200, 3)]
-    got = batch_extract(docs, cfg)
+    got = arrow_rows(batch_extract(docs, cfg))
     for i, t in enumerate(docs):
         want = features_row(np.asarray(t, np.int32), cfg)
         g = got[i]
@@ -86,13 +99,13 @@ def test_nondefault_config_parity():
 
 
 def test_peaks_batch_parity_randomized():
-    """_peaks_batch == K.spectral_peaks row-for-row across input families,
+    """_peaks_core == K.spectral_peaks row-for-row across input families,
     including tie-heavy constant-region profiles where peak selection is
     sensitive to last-ulp smoothing order (the batch path replicates
     np.convolve's oldest-first accumulation for exactly this reason)."""
     import numpy as np
     from photohive_spark import kernels as K
-    from photohive_spark.batch_kernels import _peaks_batch
+    from photohive_spark.batch_kernels import _peaks_core
     from photohive_spark.config import DEFAULT_CONFIG as CFG
 
     rng = np.random.default_rng(7)
@@ -113,6 +126,9 @@ def test_peaks_batch_parity_randomized():
         else:            # near-zero
             prof = np.zeros((m, na, nr))
             prof[:, :3, :3] = rng.random((m, 3, 3))
-        got = _peaks_batch(prof, CFG)
+        rows_idx, ang, mag = _peaks_core(prof, CFG)
+        got = [[] for _ in range(m)]
+        for r, a, mg in zip(rows_idx, ang, mag):
+            got[r].append((int(a), float(mg)))
         for r in range(m):
             assert got[r] == K.spectral_peaks(prof[r], CFG), (trial, r)

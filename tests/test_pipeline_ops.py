@@ -1108,9 +1108,14 @@ def test_repetition_stats_arrow_matches_expr(spark, sf_dir):
          ("e7", "über café über café über"),
          ("e8", "a b a b a b c a b")],
         "doc_id string, text string")
+    # no row has two words, so no Arrow batch holds a single bigram
+    no_bigram = spark.createDataFrame(
+        [("n0", None), ("n1", ""), ("n2", "one"), ("n3", " two "),
+         ("n4", "three")],
+        "doc_id string, text string")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
-    for src in (edge, docs):
+    for src in (edge, no_bigram, docs):
         fast = text.repetition_stats(src, id_col="doc_id")
         ref = text.repetition_stats(src, id_col="doc_id", impl="expr")
         assert fast.exceptAll(ref).count() == 0

@@ -10,13 +10,13 @@ from photohive_spark.config import EngineConfig
 from photohive_spark.engine import features_row
 
 
-def test_batch_honors_downsample_rate():
+def test_batch_honors_downsample_rate(arrow_rows):
     """Finding 1: downsample_rate must reach the batch path's hsv/palette
     stage (stats/FFT stay on the original sequence — src/interface.c:39-50)."""
     cfg = EngineConfig(downsample_rate=3)
     rng = np.random.default_rng(4)
     docs = [rng.integers(0, 50257, n, dtype=np.int32) for n in (100, 100, 55)]
-    got = batch_extract(docs, cfg)
+    got = arrow_rows(batch_extract(docs, cfg))
     for i, t in enumerate(docs):
         want = features_row(np.asarray(t, np.int32), cfg)
         assert got[i]["hist_counts"] == want["hist_counts"], i
@@ -30,7 +30,7 @@ def test_batch_honors_downsample_rate():
                            rtol=1e-9), i
 
 
-def test_hist_bin_ids_clamped_for_nondivisor_h_parts():
+def test_hist_bin_ids_clamped_for_nondivisor_h_parts(arrow_rows):
     """Finding 2: h_parts that doesn't divide 360 must not overflow the
     cell space (clamped into the last hue bin)."""
     cfg = EngineConfig(h_parts=7)
@@ -41,7 +41,7 @@ def test_hist_bin_ids_clamped_for_nondivisor_h_parts():
     assert g.max() < cfg.hist_cells
     # full pipelines run without crashing, and batch == per-doc
     want = features_row(t, cfg)
-    got = batch_extract([t], cfg)[0]
+    got = arrow_rows(batch_extract([t], cfg))[0]
     assert got["hist_counts"] == want["hist_counts"]
 
 

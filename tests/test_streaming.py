@@ -17,8 +17,12 @@ def test_stream_features_equal_batch(spark, sf_dir, tmp_path):
     toks.repartition(3).write.parquet(src)
 
     stream = streaming.read_tokens_stream(spark, src, max_files_per_trigger=1)
-    streaming.run_to_memory(streaming.stream_features(stream), "feat_stream")
+    q = streaming.run_to_memory(streaming.stream_features(stream),
+                                "feat_stream")
     got = {r.doc_id: r for r in spark.sql("select * from feat_stream").collect()}
+    # the stream runs the batch stage itself, not a pandas twin of it
+    plan = q._jsq.explainInternal(False)
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
     want = {r.doc_id: r
             for r in extract_features_df(spark.read.parquet(src)).collect()}
